@@ -39,9 +39,7 @@ object ScalingBench {
     // per row — the engine's own work dominates and scales.
     val inputPath = sys.env.get("SPARK_GRAFT_INPUT")
 
-    def runOnce(cpus: Int, rows: Long = nPages,
-        suiteFor: SparkSession => graft.engine.Runner.Suite =
-          s => Flagship.scalingSuite(s)): Double = {
+    def runOnce(cpus: Int, rows: Long = nPages): Double = {
       // SPARK_GRAFT_MASTER overrides the in-process local[N] master — the
       // north rule's literal shape is N vs 4N EXECUTORS, and Spark's
       // local-cluster[n, cores, memMB] master launches n real separate
@@ -99,8 +97,8 @@ object ScalingBench {
         val t0 = System.nanoTime()
         // scalingSuite = core + model families (round-3 verdict item 2);
         // the near-dup pair-generation shuffle is excluded so the proxy
-        // stays scan-dominated — its row compute is in compute mode below
-        Runner.run(pages, suiteFor(spark))
+        // stays scan-dominated
+        Runner.run(pages, Flagship.scalingSuite(spark))
           .unified.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } finally spark.stop()
@@ -124,111 +122,6 @@ object ScalingBench {
       println(f"[scaling] materialized pages=$nPages parts=$parts " +
         f"out=$out sec=${(System.nanoTime() - t0) / 1e9}%8.2f")
       spark.stop()
-      return
-    }
-
-    // families mode: time each suite family ALONE at the given core count
-    // and page count — the fixed-cost localizer. The 30 M-page round-5
-    // pair measured 0.549 efficiency while the 1 M-page warmups implied a
-    // ~440 s fixed cost at 32 cores vs ~140 s at 8 — a fixed cost that
-    // GROWS with cores sinks any feasible-size pair, so it must be
-    // attributed per family before it can be cut.
-    if (sys.env.get("SPARK_GRAFT_MODE").contains("families")) {
-      val fams: Seq[(String, SparkSession => graft.engine.Runner.Suite)] =
-        Seq("core" -> ((s: SparkSession) => Flagship.suiteOf(s, Flagship.coreChecks))) ++
-          Flagship.modelChecks.map(c =>
-            c.id -> ((s: SparkSession) => Flagship.suiteOf(s, Seq(c)))) :+
-          ("full" -> ((s: SparkSession) => Flagship.scalingSuite(s)))
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_ONESHOT", lo.toString).toInt
-      // JIT warmup on the full composition at small rows
-      val w = runOnce(cpus, math.min(nPages, 200000L))
-      println(f"[scaling] families warmup cores=$cpus suite=${w}%7.2f s")
-      (1 to reps).foreach { rep =>
-        fams.foreach { case (name, sf) =>
-          val sec = runOnce(cpus, nPages, sf)
-          println(f"[scaling] family=$name%-20s rep=$rep cores=$cpus%-3d " +
-            f"pages=$nPages sec=${sec}%8.2f")
-        }
-      }
-      return
-    }
-
-    // compute-only mode: a shuffle-free, fully-codegen'd row-level pass
-    // made of the SUITE'S OWN hot per-row operations — xxhash64 key hash +
-    // sha2-256 payload digest (the fused KeyScan map side), terminal-digit
-    // extraction (DigitPreference) and calendar panel binning
-    // (Categorical/Drift) — over deterministically generated pages
-    // (generation is itself pure column CPU work and is included in the
-    // timing; there is no input I/O to time instead). Zero shuffle end to
-    // end, so this isolates CPU scaling from the shared-disk/memory-bus
-    // shuffle the single-box sandbox cannot scale.
-    if (sys.env.get("SPARK_GRAFT_MODE").contains("compute")) {
-      import org.apache.spark.sql.{Column, DataFrame}
-      import org.apache.spark.sql.functions._
-      // two row-op profiles, each shuffle-free end to end:
-      //  - keyscan_digit_panel: the hash/derive ops of the fused scans
-      //    (light per row — stresses scan/codegen throughput);
-      //  - dedup_signatures: the near-dup/minhash signature computation
-      //    (compute-BOUND per row — md5 per token) so the CPU-scaling
-      //    evidence covers a heavy op, not just hash/digit/panel derivation
-      // SPARK_GRAFT_OPS selects a subset (comma list) — the light keyscan
-      // op runs at 100M for cross-round comparability while the heavy
-      // signature op uses a smaller page count in the same wall budget
-      val opFilter = sys.env.get("SPARK_GRAFT_OPS")
-        .map(_.split(",").map(_.trim).toSet)
-      val allOps: Seq[(String, DataFrame => DataFrame)] = Seq(
-        "keyscan_digit_panel" -> (p => p.select(
-          xxhash64(col("url")).as("kh"),
-          xxhash64(sha2(col("text").cast("binary"), 256)).as("digest"),
-          graft.operators.DigitPreference.digitAt(col("score"), 0.1).as("d"),
-          graft.operators.PanelBins.panel(col("warc_ts"), "quarter").as("panel"))),
-        "dedup_signatures" -> (p => p.select(
-          graft.functions.SimHash64.ofText(col("text")).as("sim"),
-          xxhash64(graft.functions.TextFunctions
-            .minhashSignature(col("text"), 3, 12)).as("mh"))))
-      val ops = allOps.filter { case (n, _) => opFilter.forall(_.contains(n)) }
-      def computeOnce(cpus: Int, proj: DataFrame => DataFrame): Double = {
-        val spark = SparkSession.builder().master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false").getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
-        try {
-          // honor SPARK_GRAFT_INPUT like the suite legs: the in-line
-          // generator's string churn saturates the single box's memory
-          // write bus below 8 threads (BENCH/BASELINE.md round 5), which
-          // contaminates the CPU-scaling evidence the compute mode exists
-          // to isolate
-          val pages = inputPath match {
-            case Some(p) => spark.read.parquet(p)
-            case None    => Pages.generate(spark, nPages, numPartitions = cpus * 4)
-          }
-          val t0 = System.nanoTime()
-          proj(pages).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } finally spark.stop()
-      }
-      ops.foreach { case (_, proj) => computeOnce(hi, proj) } // warmup
-      val cres = scala.collection.mutable.Map[(String, Int), List[Double]]()
-        .withDefaultValue(Nil)
-      (1 to reps).foreach { rep =>
-        ops.foreach { case (name, proj) =>
-          Seq(lo, hi).foreach { cpus =>
-            val sec = computeOnce(cpus, proj)
-            cres((name, cpus)) = sec :: cres((name, cpus))
-            println(f"[scaling] compute op=$name rep=$rep cores=$cpus%-3d " +
-              f"pass=${sec}%7.2f s (${nPages / sec}%9.0f docs/s)")
-          }
-        }
-      }
-      ops.foreach { case (name, _) =>
-        val bn = cres((name, lo)).min
-        val b4 = cres((name, hi)).min
-        val eff = bn / (4.0 * b4)
-        println(s"""{"metric":"compute scaling efficiency","op":"$name",""" +
-          s""""value":${num(eff, 3)},"unit":"ratio","pages":$nPages,""" +
-          s""""n_cores":$lo,"n4_cores":$hi,"best_sec_n":${num(bn, 2)},""" +
-          s""""best_sec_4n":${num(b4, 2)}}""")
-      }
       return
     }
 

@@ -188,7 +188,12 @@ final case class LongitudinalOutlierCheck(
       * (stats.RandomEffects — fully distributed, q×q solves only on
       * reduced frames, PSD eigen-clamp); flags use the marginal
       * studentized residual r/√(t'Ĝt + σ²ₑ). Mutually exclusive with
-      * `slopeVar` (which stays the oracled q = 2 fast path). With
+      * `slopeVar` (which stays the oracled q = 2 path). At q = 2 the two
+      * agree only when the raw Ĝ is PSD: `slopeVar` clamps entries
+      * (diagonals ≥ 0, |g01| ≤ √(g00·g11)) while this eigen-clamps, so an
+      * indefinite Ĝ differs — q67's sf0.01 fixture, raw eigenvalues
+      * (−24.08, 0.0054), gets G = 0 from the former and a rank-1 G from
+      * the latter. With
       * `method = "reml"`, exact q×q REML over guarded design classes
       * (stats.RandomEffects.remlEstimates) up to
       * RandomEffects.RemlMaxTerms terms; past that CheckCompiler

@@ -55,14 +55,15 @@ object CacheTracker {
   }
 
   /** Run `body` and return it together with every frame `cached` registered
-    * inside it, WITHOUT unpersisting on exit — the caller owns the release
-    * (e.g. `RunResult.release()` after materializing lazy outputs). The
-    * collected frames are also re-registered with the enclosing scope, if
-    * any, so a surrounding `scope { }` (the resumable runner's per-unit
-    * scope) still frees them even if the caller never calls release. */
+    * inside it, WITHOUT unpersisting on normal exit — the caller owns the
+    * release (e.g. `RunResult.release()` after materializing lazy outputs).
+    * The collected frames are also re-registered with the enclosing scope,
+    * if any, so a surrounding `scope { }` (the resumable runner's per-unit
+    * scope) still frees them even if the caller never calls release. If
+    * `body` throws, nobody can own the frames: they are unpersisted. */
   def collect[T](body: => T): (T, Seq[DataFrame]) = {
     val frames = new ListBuffer[DataFrame]
-    val res = active.withValue(frames :: active.value)(body)
+    val res = releasingOnFailure(frames)(active.withValue(frames :: active.value)(body))
     active.value.headOption.foreach(_ ++= frames)
     (res, frames.toList)
   }
@@ -74,12 +75,21 @@ object CacheTracker {
     * thread's scope list and `cached` would then append to a ListBuffer the
     * main thread (or a sibling worker) is mutating concurrently. The caller
     * re-homes the returned frames into its own scope with `registerAll`
-    * from exactly one thread. */
+    * from exactly one thread. If `body` throws, the frames it cached are
+    * unpersisted before the exception propagates. */
   def isolated[T](body: => T): (T, Seq[DataFrame]) = {
     val frames = new ListBuffer[DataFrame]
-    val res = active.withValue(frames :: Nil)(body)
+    val res = releasingOnFailure(frames)(active.withValue(frames :: Nil)(body))
     (res, frames.toList)
   }
+
+  private def releasingOnFailure[T](frames: ListBuffer[DataFrame])(body: => T): T =
+    try body
+    catch {
+      case e: Throwable =>
+        frames.foreach(_.unpersist(blocking = false))
+        throw e
+    }
 
   /** Register frames that are ALREADY cached (by a worker thread inside
     * `isolated`) with the innermost open scope of the calling thread, so

@@ -103,14 +103,12 @@ object Runner {
     // dup_count AND distinct-digest count) serves both checks' second
     // phase too: 4 full input scans become 2.
     val byteChecks = checks.collect { case c: ByteIdentityCheck => c }
-    val fuseKeyScan = spark.conf.get("spark.graft.fuse.keyscan", "true").toBoolean
     // lazy: KeyScan.phase2's broadcast decision runs an eager full-table
     // count — deferring construction moves that job into the parallel
     // build pool below (first uniqueness/byte-identity thunk computes it,
     // the sibling blocks on the lazy-val latch; all other checks overlap)
     lazy val fused: Map[String, (UniquenessCheck, ByteIdentityCheck, DataFrame)] =
-      if (!fuseKeyScan) Map.empty
-      else checks.collect {
+      checks.collect {
         case u: UniquenessCheck =>
           byteChecks.collectFirst {
             case b if b.scope.isEmpty && (u.scope ++ u.keys).distinct == Seq(b.keyCol) =>
@@ -130,9 +128,8 @@ object Runner {
     val catChecks = checks.collect { case c: CategoricalConsistencyCheck => c }
     val digChecks = checks.collect { case c: DigitPreferenceCheck => c }
     val drChecks = checks.collect { case c: DriftCheck => c }
-    val fuseCells = spark.conf.get("spark.graft.fuse.cells", "true").toBoolean
     val cellPre: Map[String, DataFrame] =
-      if (!fuseCells || catChecks.size + digChecks.size + drChecks.size < 2) Map.empty
+      if (catChecks.size + digChecks.size + drChecks.size < 2) Map.empty
       else {
         // ALL drift bin edges ride ONE broadcast 1-row frame (one
         // agg(min,max per column) pass) instead of one full scan per check
@@ -159,7 +156,7 @@ object Runner {
     // Gram collects, the UN-panel Σ̂ collect, the dedup candidate counts,
     // the variance-component estimates) — at bench scale the full suite
     // spent 19 s building sequentially vs 16 s executing the unified
-    // action (RunProbe). The builds are independent across checks, so they
+    // action. The builds are independent across checks, so they
     // run on a small thread pool (guide §2.6: actions are only sequential
     // because the driver calls them sequentially); results are collected
     // in check order, so verdict/violation frame content and order are
@@ -251,18 +248,15 @@ object Runner {
           math.min(buildThreads, buildable.size))
         try {
           val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val debug = spark.conf.get("spark.graft.build.debug", "false").toBoolean
           val fs = buildable.map(c =>
-            scala.concurrent.Future(CacheTracker.isolated {
-              val t0 = System.nanoTime()
-              val out = buildCheck(c)
-              if (debug) println(f"[runner] build ${c.id}%-20s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-              out
-            })(ec))
-          val built = fs.map(scala.concurrent.Await.result(_,
-            scala.concurrent.duration.Duration.Inf))
-          built.foreach { case (_, frames) => CacheTracker.registerAll(frames) }
-          built.map(_._1)
+            scala.concurrent.Future(CacheTracker.isolated(buildCheck(c)))(ec))
+          // a failed build still waits for its siblings and re-homes their
+          // caches, so the enclosing collect releases them before the first
+          // failure (in check order) propagates
+          val built = fs.map(f => scala.concurrent.Await.ready(f,
+            scala.concurrent.duration.Duration.Inf).value.get)
+          built.foreach(_.foreach { case (_, frames) => CacheTracker.registerAll(frames) })
+          built.map(_.get._1)
         } finally pool.shutdown()
       }
 

@@ -52,10 +52,15 @@ object VectorFunctions {
     * sign pattern of the first `bits` components (a random-hyperplane LSH
     * with axis-aligned planes — cheap, deterministic, portable). Vectors
     * only compete against vectors in the same cell, so the candidate join
-    * is a bucket-equi-join instead of a full cross product.
+    * is a bucket-equi-join instead of a full cross product. `bits` must lie
+    * in [1, 63]: the cell id is a non-negative long — a 64th component
+    * would set the sign bit and a 65th would wrap onto bit 0 — and zero
+    * bits would put every vector in cell 0.
     */
-  def signBucket(a: Column, bits: Int): Column =
+  def signBucket(a: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 63, s"signBucket bits=$bits must be in [1, 63]")
     GraftBridge.toColumn(SignBucket(GraftBridge.toExpression(a), bits))
+  }
 
   /** The pre-round-6 higher-order-function signBucket — bit-identity
     * reference for the native expression. */

@@ -143,9 +143,12 @@ object Drift {
       .withColumn("x2_term",
         when(col("e1") > 0, pow(col("o1") - col("e1"), 2) / col("e1")).otherwise(0.0) +
         when(col("e2") > 0, pow(col("o2") - col("e2"), 2) / col("e2")).otherwise(0.0))
-      // KS: cumulative share difference per bin (ordered by bin)
+      // KS: cumulative share difference per bin (ordered by bin). A scope
+      // with a single window has no rest (n2 = 0): its cum2 stays null —
+      // ANSI division would throw — and the n_rest filter drops the window
       .withColumn("cum1", sum("o1").over(wPanel.orderBy("bin")) / col("n1"))
-      .withColumn("cum2", sum("o2").over(wPanel.orderBy("bin")) / col("n2"))
+      .withColumn("cum2", when(col("n2") > 0,
+        sum("o2").over(wPanel.orderBy("bin")) / col("n2")))
       .withColumn("ks_term", abs(col("cum1") - col("cum2")))
     val perPanel = withTerms.groupBy(keyCols.map(col): _*).agg(
       sum("x2_term").as("stat"),

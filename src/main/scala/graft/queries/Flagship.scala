@@ -77,8 +77,7 @@ object Flagship {
 
   /** Scan-scaling proxy composition: everything scan-dominated, including
     * the model families (per the round-3 verdict), excluding only the
-    * near-dup pair-generation shuffle whose row-level compute is covered
-    * by the compute-mode scaling evidence. */
+    * near-dup pair-generation shuffle. */
   def scalingSuite(spark: SparkSession): Runner.Suite =
     mkSuite(spark, coreChecks ++ modelChecks)
 

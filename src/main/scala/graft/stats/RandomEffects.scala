@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * reference (longitudinalPlot.sas:49-51,128-129,436-440) for an
   * ARBITRARY term list, by the same Swamy-type two-stage method of
   * moments as the q = 2 special case (`RandomSlope`, which this
-  * generalizes; RandomEffectsSpec pins the q = 2 equality).
+  * generalizes). At q = 2 the two agree only while the raw Ĝ is PSD
+  * (RandomEffectsSpec pins that case); their PSD projections differ
+  * otherwise — see stage 2 below.
   *
   * Model: r_ij = t_ij' u_i + e_ij with t_ij = (1, x1_ij, …) ∈ R^q,
   * u_i ~ N(0, G) unstructured q×q, e ~ N(0, σ²_e).
@@ -19,9 +21,14 @@ import org.apache.spark.sql.functions._
   * reduced frame), never per input row. Stage 2 (per scope, one more
   * tiny agg): σ²_e = Σ SSE_i / Σ (n_i − q);  S = sample covariance of
   * b_i;  G = S − σ²_e · mean_i (T_i'T_i)⁻¹, projected to the PSD cone
-  * by eigenvalue clamping (the q×q generalization of the q = 2 clamp
-  * `g00,g11 ≥ 0, |g01| ≤ √(g00·g11)`; for q = 2 both projections keep
-  * the same definiteness guarantee, RandomEffectsSpec pins PSD).
+  * by eigenvalue clamping. RandomSlope's q = 2 clamp
+  * (`g00,g11 ≥ 0, |g01| ≤ √(g00·g11)`) gives the same definiteness
+  * guarantee and the same G when the raw Ĝ is already PSD, but NOT when
+  * it is indefinite: on q67's sf0.01 `events` fixture the raw Ĝ is
+  * [[−24.02, 1.188], [1.188, −0.0533]] (eigenvalues −24.08, 0.0054); the
+  * q = 2 clamp gives G = 0 there, the eigen-clamp a rank-1
+  * G ≈ 0.0054·vvᵀ. So routing q67 through this object would change its
+  * DuckDB-matched result, and RandomSlope stays the q = 2 path.
   *
   * Subjects with n_i ≤ q or a degenerate within-subject design (Cholesky
   * pivot under relative tolerance — e.g. a term constant within the

@@ -296,4 +296,41 @@ class EngineSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty,
       "parallel-built caches must release like sequential ones")
   }
+
+  test("a failed parallel build surfaces its error and releases the run's caches") {
+    val input = Pages.generate(spark, 8000)
+    // url has ~8000 levels: OlsPass.design's MaxLevels require fails inside
+    // the build pool while the categorical and digit builds plant caches
+    val suite = Runner.Suite(
+      checks = Seq(
+        CategoricalConsistencyCheck("cc", "lang", "host_bucket",
+          dateCol = Some("warc_ts"), interval = "quarter"),
+        RegressionOutlierCheck("ro", "n_chars", "url", discCovariates = Seq("url")),
+        DigitPreferenceCheck("dp", "score", place = 0.1, groupCol = "host_id")),
+      keyCol = "url")
+    spark.catalog.clearCache()
+    spark.conf.set("spark.graft.build.threads", "4")
+    val e = try intercept[IllegalArgumentException](Runner.run(input, suite))
+      finally spark.conf.unset("spark.graft.build.threads")
+    assert(e.getMessage.contains(s"exceeds ${graft.operators.OlsPass.MaxLevels} levels"),
+      e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed build must not leak the caches its sibling builds planted")
+  }
+
+  test("month units: every single-quarter unit of the core suite commits") {
+    // a month holds one quarter, so DriftCheck sees a single window per
+    // unit — it must drop that window, not divide by its empty rest. Six
+    // months keep the per-unit suite runs few.
+    val dir = java.nio.file.Files.createTempDirectory("graft-month-units").toString
+    val input = Pages.generate(spark, 8000)
+      .withColumn("month", date_format(col("warc_ts"), "yyyy-MM"))
+      .filter(col("month") <= "2023-06")
+    val months = input.select("month").distinct().collect().map(_.getString(0)).toSet
+    val res = Runner.runResumable(input, Flagship.coreSuite(spark),
+      dir, "month", "run-month")
+    val committed = graft.store.TableIO.readManifest(dir).map(_.unit)
+    assert(committed.sorted == months.toSeq.sorted, s"committed $committed of $months")
+    assert(res.verdicts.count() > 0)
+  }
 }

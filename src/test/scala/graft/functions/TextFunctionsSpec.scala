@@ -267,5 +267,13 @@ class TextFunctionsSpec extends SparkSpec {
         VectorFunctions.signBucket($"a", 8),
         VectorFunctions.signBucketDeclarative($"a", 8)).collect()(0)
     assert(nr.isNullAt(0) && nr.isNullAt(1) && nr.isNullAt(2) && nr.isNullAt(3))
+    // bits outside [1, 63] are rejected: 64 would wrap 1L << 63 onto the
+    // sign bit and 1L << 64 onto bit 0; 0 would map every vector to cell 0
+    for (bad <- Seq(0, -1, 64, 65))
+      intercept[IllegalArgumentException](VectorFunctions.signBucket($"a", bad))
+    // the widest cell id keeps every bit below the sign bit
+    val wide = Seq(Seq.fill(70)(1f)).toDF("a")
+      .select(VectorFunctions.signBucket($"a", 63)).collect()(0).getLong(0)
+    assert(wide == Long.MaxValue, s"63 positive components set bits 0..62: $wide")
   }
 }

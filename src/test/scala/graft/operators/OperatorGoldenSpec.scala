@@ -522,6 +522,25 @@ class OperatorGoldenSpec extends SparkSpec {
     }
   }
 
+  test("Drift drops a single-window scope instead of dividing by an empty rest") {
+    // scope "a" spans two quarters, scope "b" only one: b has no pooled
+    // rest to compare against, so it yields no tests row (and must not
+    // raise DIVIDE_BY_ZERO under ANSI); a single-window input yields none
+    val q1 = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
+    val q2 = java.sql.Timestamp.valueOf("2024-05-01 00:00:00")
+    val rows =
+      Seq.fill(10)(("a", q1, 0.5)) ++ Seq.fill(10)(("a", q2, 3.5)) ++
+      Seq.fill(10)(("b", q1, 0.5)) ++ Seq.fill(10)(("b", q1, 3.5))
+    val df = rows.toDF("grp", "ts", "v")
+    val scoped = Drift.tests(df, DriftCheck("ds", "v", "ts", interval = "quarter",
+      bins = 4, scope = Seq("grp"))).collect()
+    assert(scoped.map(_.getAs[String]("grp")).toSeq.sorted == Seq("a", "a"),
+      s"only the two-window scope is tested: ${scoped.toSeq}")
+    val single = Drift.tests(df.filter($"grp" === "b"), DriftCheck("d1", "v", "ts",
+      interval = "quarter", bins = 4)).collect()
+    assert(single.isEmpty, s"single window must yield no tests rows: ${single.toSeq}")
+  }
+
   // ---- uniqueness / referential / byte identity ---------------------------
 
   test("Uniqueness counts extra rows; Referential finds orphans; ByteIdentity catches divergence") {
